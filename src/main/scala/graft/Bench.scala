@@ -1,16 +1,44 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 object Bench {
+
+  /** JVM/codegen warm-up outside any timed region: small end-to-end runs
+    * at sf0.001 so measured queries don't pay classloading + JIT for the
+    * relational, dedup, and vector kernels.
+    */
+  def warmUp(spark: SparkSession): Unit = {
+    val warmDir = "/root/testdata/sf0.001"
+    Seq(
+      () => SparkEntry.entry(spark),
+      () => SparkEntry.queries("q21_dedup_minhash")(spark, warmDir),
+      () => SparkEntry.queries("q25_knn_brute")(spark, warmDir)
+    ).foreach { f =>
+      try f().write.format("noop").mode("overwrite").save()
+      catch { case e: Throwable => System.err.println(s"[bench] warmup failed: $e") }
+    }
+  }
+
+  /** Settle the JVM before a timed run, outside the timer: collect the
+    * previous run's garbage (broadcasts are GC-released) so one query's
+    * allocation debt doesn't bill the next one's wall time, then give the
+    * ContextCleaner's ASYNC block/broadcast removal a bounded window to
+    * drain (r19 measurement hygiene: the removals run on the cleaner
+    * thread and otherwise land inside the NEXT query's timed region —
+    * q102 measured 5.7 s isolated vs 18.5 s mid-bench on identical code;
+    * the bleed spreads across whichever heavy query runs next).
+    */
+  def settle(): Unit = {
+    System.gc()
+    Thread.sleep(250)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the machine: local[4] on a 32-thread box leaves 8x
-    // parallelism unused (the driver contract says local[32])
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString).toInt
     // The tuned session (AQE, skew-join, broadcast threshold, Kryo) — the
     // same knobs the library recommends for a real cluster.
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     // Environmental contention snapshot (r13 verdict #7): the driver's
     // official run has measured ~13% hot against an idle-box record with
@@ -57,35 +85,12 @@ object Bench {
       if (sbtish) "sbt-runMain" else "direct-java"
     })
 
-    // JVM/codegen warmup outside the timed region: small end-to-end runs
-    // at sf0.001 so measured queries don't pay classloading + JIT for the
-    // relational, dedup, and vector kernels.
-    val warmDir = "/root/testdata/sf0.001"
-    Seq(
-      () => SparkEntry.entry(spark),
-      () => SparkEntry.queries("q21_dedup_minhash")(spark, warmDir),
-      () => SparkEntry.queries("q25_knn_brute")(spark, warmDir)
-    ).foreach { f =>
-      try f().write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] warmup failed: $e") }
-    }
+    warmUp(spark)
 
     // noop sink: forces full computation of every output column (a count()
     // would let Spark prune unused projections and fake the timing).
-    def timeOne(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      // settle the JVM between queries: collect the previous query's
-      // garbage (broadcasts are GC-released) OUTSIDE the timed region so
-      // one query's allocation debt doesn't bill the next one's wall time
-      System.gc()
-      // ...and give the ContextCleaner's ASYNC block/broadcast removal a
-      // bounded window to drain (r19 measurement hygiene): the GC above
-      // only unlinks references — the actual removals run on the cleaner
-      // thread and otherwise land inside the NEXT query's timed region
-      // (q102 measured 5.7 s isolated vs 18.5 s mid-bench on identical
-      // code; the bleed spreads across whichever heavy query runs next).
-      // The sleep is outside the timer, so it costs run wall-clock, never
-      // a query's reported seconds.
-      Thread.sleep(250)
+    def timeOne(name: String, fn: (SparkSession, String) => DataFrame): Double = {
+      settle()
       val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }

@@ -13,38 +13,49 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder =
-    SparkSession
-      .builder()
-      .master(master)
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // AQE sort-merge -> shuffled-hash rewrite (opt guide §3.1), off by
-      // default (threshold 0): when every post-shuffle partition's map
-      // output is under the bound, hashing the smaller side per partition
-      // skips BOTH sort passes. Guarded by actual runtime sizes, so big
-      // partitions keep the spillable sort-merge — the same 64 MB bound
-      // is right on a cluster (it is per-partition, not per-node).
-      // Measured: q65 3.6 -> 2.6 s, q99b 4.3 -> 4.0 s, no regressions.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        (64L * 1024 * 1024).toString)
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
+  /** The settings every graft session carries, local or cluster. */
+  val sharedConf: Map[String, String] = Map(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    // AQE sort-merge -> shuffled-hash rewrite (opt guide §3.1), off by
+    // default (threshold 0): when every post-shuffle partition's map
+    // output is under the bound, hashing the smaller side per partition
+    // skips BOTH sort passes. Guarded by actual runtime sizes, so big
+    // partitions keep the spillable sort-merge — the same 64 MB bound
+    // is right on a cluster (it is per-partition, not per-node).
+    // Measured: q65 3.6 -> 2.6 s, q99b 4.3 -> 4.0 s, no regressions.
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> (64L * 1024 * 1024).toString,
+    "spark.sql.autoBroadcastJoinThreshold" -> (64L * 1024 * 1024).toString,
+    "spark.serializer" -> "org.apache.spark.serializer.KryoSerializer")
 
+  private def graftBuilder(shufflePartitions: Int): SparkSession.Builder =
+    sharedConf.foldLeft(
+      SparkSession.builder().appName("graft")
+        .config("spark.sql.shuffle.partitions", shufflePartitions.toString)) {
+      case (b, (k, v)) => b.config(k, v)
+    }
+
+  def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder =
+    graftBuilder(shufflePartitions).master(master).config("spark.ui.enabled", "false")
+
+  /** The host session Bench, Verify and Profile open: `local[N]` with N
+    * = `SPARK_GRAFT_CPUS`, else the machine's processor count (a fixed
+    * local[4] on a 32-thread box leaves 8x parallelism unused), shuffle
+    * partitions = N, log level WARN.
+    */
   def local(): SparkSession = {
-    val s = builder().getOrCreate()
+    val cpus = sys.env.getOrElse(
+      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString).toInt
+    val s = builder(s"local[$cpus]", cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
 
   /** Cluster profile: the additional knobs a 1000-executor / 100 TB
-    * deployment sets on top of [[builder]]'s. Shuffle partition count
+    * deployment sets on top of [[sharedConf]]. Shuffle partition count
     * should be ≈ 2–3× total executor cores (here parameterized);
     * `maxPartitionBytes` keeps scan tasks ≈256 MB so a 100 TB input yields
     * ~400k tasks rather than 4M; advisory partition size gives AQE a
@@ -53,23 +64,9 @@ object GraftSession {
     * rides the job's natural parallelism curve.
     */
   def clusterBuilder(shufflePartitions: Int): SparkSession.Builder =
-    SparkSession
-      .builder()
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // same AQE shuffled-hash rewrite as [[builder]] (per-partition
-      // bound, spill-safe fallback for oversized partitions)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        (64L * 1024 * 1024).toString)
+    graftBuilder(shufflePartitions)
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (256L * 1024 * 1024).toString)
       .config("spark.sql.files.maxPartitionBytes", (256L * 1024 * 1024).toString)
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.dynamicAllocation.enabled", "true")
       .config("spark.dynamicAllocation.shuffleTracking.enabled", "true")
 

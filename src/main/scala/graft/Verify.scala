@@ -36,10 +36,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional third arg (local debugging only): run just the named queries
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString).toInt
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val failures = dumpAll(spark, sfDir, outDir,
       SparkEntry.queries.toSeq.filter { case (name, _) => only.isEmpty || only(name) })
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

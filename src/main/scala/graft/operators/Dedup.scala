@@ -672,8 +672,9 @@ object Dedup {
     // (shingleN = 0, duplicates weighted) concentrate on head-heavy
     // corpora: every doc is dominated by the same frequent words, so
     // signatures crowd one Hamming ball and the true hamming<=h pair set
-    // is quadratic — the r7 ScaleCurve measured ~100x pairs per 10x docs
-    // on BOTH the 31-word and the Zipf corpus. Distinct n-gram shingle
+    // is quadratic — r7 measured ~100x pairs per 10x docs on BOTH the
+    // 31-word and the Zipf corpus (graft.Profile's shufRecords over a
+    // GenData ladder re-measures it). Distinct n-gram shingle
     // features (shingleN >= 2) spread the signature: shingles are
     // near-unique strings, their hashes uniform, and the pair volume
     // collapses to the true near-dup rate (~linear — measured 11x per

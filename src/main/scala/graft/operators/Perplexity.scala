@@ -64,7 +64,8 @@ object Perplexity {
     * model frames are MATERIALIZED here (localCheckpoint) — they are the
     * persistable artifact, and every downstream score join would
     * otherwise re-aggregate the reference corpus per consumer (the
-    * ScanCount recomputation trap: q68 hit 10 source scans before this).
+    * recomputation trap: r5 q68 hit 10 source scans before this;
+    * graft.Profile's fileScans re-measures it).
     *
     * `minCount` is the KenLM-style count-threshold pruning knob: bigrams
     * seen fewer than `minCount` times are DROPPED from the model (default

@@ -32,11 +32,12 @@ object Spread {
 
   /** The partition probe is only free on scan-shaped plans. On a plan
     * with exchanges, `df.rdd.getNumPartitions` under AQE EXECUTES every
-    * query stage to finalize the adaptive plan (measured: 2 jobs / 2.8 s
-    * on a small join subtree — ProbeRddCost), so probing there would run
-    * the query twice. Such inputs are either already spread by an
-    * upstream guard or genuinely distributed; the guard passes them
-    * through untouched.
+    * query stage to finalize the adaptive plan (measured r20: 2 jobs /
+    * 2.8 s on a small join subtree at sf0.1; SpreadSpec pins that the
+    * guard launches none, and `graft.Profile`'s job list names any job by
+    * its callsite), so probing there would run the query twice. Such
+    * inputs are either already spread by an upstream guard or genuinely
+    * distributed; the guard passes them through untouched.
     */
   private def probeSafe(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
     plan.collectFirst {

@@ -40,8 +40,8 @@ import org.apache.spark.sql.functions._
   * quadratic (spec: DedupSpec "degenerate hot block").
   *
   * Candidate UPPER-BOUND prune (r10): SCALING_r9 blamed the zipf10 tail
-  * on a hot chunk-key group; the per-stage ScaleCurve drill-down built
-  * to verify that showed otherwise — the cap never even BINDS there
+  * on a hot chunk-key group; the r10 per-stage drill-down (now
+  * graft.Profile's stage list) showed otherwise — the cap never even BINDS there
   * (every prefix posting list is shorter than it; shuffle volume is
   * bit-identical at cap 384 and 1024), the global max-task-records
   * metric belonged to the (uniform) weight-table checkpoint stage, and
@@ -168,8 +168,9 @@ object TfidfSim {
       col("dn").as("dn_2"), col("sfx").as("sfx_2"),
       explode(sequence(lit(0), col("g"))).as("lo"), col("g").as("hi")): _*)
     // Candidate upper-bound prune (r10 — the zipf10 verify tail's real
-    // lever; the per-stage ScaleCurve drill-down showed the tail is the
-    // UNIFORM verify stage, not a hot key group): at a collision on term
+    // lever; the per-stage drill-down, now graft.Profile's stage list,
+    // showed the tail is the UNIFORM verify stage, not a hot key group):
+    // at a collision on term
     // t, dot(a,b) over terms after t is ≤ sfx_a·sfx_b, so
     //   ub(t) = dn_a(t)·dn_b(t) + sfx_a(t)·sfx_b(t)
     // bounds the full cosine WHEN t is the pair's rarest shared term —

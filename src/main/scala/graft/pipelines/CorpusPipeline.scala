@@ -322,6 +322,11 @@ object CorpusPipeline {
     * for train-split docs (null for val/test) — the frame a training job
     * actually consumes (filter split, order by ordinal, feed the shard
     * exporter).
+    *
+    * Output columns are `(doc_id, text, source)` plus `split`,
+    * `split_key` and `ordinal`; any other input column is dropped,
+    * because the v3 repetition stage is always materialized and its
+    * checkpoint keeps only those three input columns.
     */
   def cleanV3(docs: DataFrame, cfg: Config = Config()): DataFrame = {
     val (st, ord) = stagesV3(docs, cfg, checkpoint = false)

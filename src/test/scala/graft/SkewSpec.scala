@@ -51,6 +51,15 @@ class SkewSpec extends SparkTestBase {
     GraftSession.objectStoreBuilder(shufflePartitions = 2048)
   }
 
+  test("a builder session carries every shared session setting") {
+    // the suite's session comes from GraftSession.builder; builder options
+    // land in the SparkConf, which no runtime conf change touches
+    val conf = spark.sparkContext.getConf
+    GraftSession.sharedConf.foreach { case (k, v) =>
+      assert(conf.get(k) == v, k)
+    }
+  }
+
   test("saltedJoin tolerates map-typed fact columns (excluded from the salt)") {
     import org.apache.spark.sql.functions._
     val fact = ((1 to 50).map(i => (1L, s"v$i")) :+ ((2L, "x")))

@@ -27,8 +27,10 @@ class SpreadSpec extends SparkTestBase {
   test("an already-wide input passes through with its partitioning intact") {
     import spark.implicits._
     val target = spark.sparkContext.defaultParallelism
+    // localCheckpoint keeps the plan probe-safe, so the guard reaches its
+    // width check instead of bailing out on the repartition node
     val df = (1 to 100).map(i => (i.toLong, s"t$i")).toDF("id", "text")
-      .repartition(target)
+      .repartition(target).localCheckpoint()
     val out = Spread.ifNarrow(df)
     assert(out.rdd.getNumPartitions == target, "guard must not re-exchange")
     assert(out eq df, "wide input must be returned unchanged")
@@ -41,16 +43,19 @@ class SpreadSpec extends SparkTestBase {
     val agg = docs.groupBy("src").agg(count(lit(1)).as("n"))
     val joined = docs.join(agg, Seq("src"))
     var jobs = 0
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+    val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs += 1
-    })
-    assert(Spread.ifNarrow(joined) eq joined,
-      "a join subtree must pass through unprobed")
-    assert(Spread.ifNarrow(agg) eq agg,
-      "an aggregate subtree must pass through unprobed")
-    Thread.sleep(300) // let any (unexpected) job-start events surface
-    assert(jobs == 0, s"the guard must not execute anything, launched $jobs jobs")
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(Spread.ifNarrow(joined) eq joined,
+        "a join subtree must pass through unprobed")
+      assert(Spread.ifNarrow(agg) eq agg,
+        "an aggregate subtree must pass through unprobed")
+      Thread.sleep(300) // let any (unexpected) job-start events surface
+      assert(jobs == 0, s"the guard must not execute anything, launched $jobs jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("a streaming frame passes through untouched") {

@@ -8,6 +8,7 @@
 #
 #   tools/runjava.sh graft.Bench
 #   tools/runjava.sh graft.Verify /root/testdata/sf0.01 /tmp/out [query ...]
+#   tools/runjava.sh graft.Profile <q1,q2,...|all> [dir1,dir2,...] [reps] [--plan]
 #
 # Run from the repo root (classpath is relative). Bench stamps the
 # record with "launcher":"direct-java" when started this way — pinned
