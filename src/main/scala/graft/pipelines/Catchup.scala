@@ -99,14 +99,28 @@ object Catchup {
       marketFeed: LocalDate => DataFrame,
       startDate: LocalDate, untilExclusive: LocalDate,
       language: String = "en",
-      retries: Int = 1, minRows: Long = 1): Seq[DayRun] = {
-    val wm = s"$outputRoot/_catchup_watermark"
-    var details = Map.empty[LocalDate, Seq[Dag.Outcome]]
-    val ran = run(spark, wm, startDate, untilExclusive) { d =>
+      retries: Int = 1, minRows: Long = 1): Seq[DayRun] =
+    runDags(spark, outputRoot, startDate, untilExclusive) { d =>
       val b = TweetsAndMarketDag.build(
         spark, inputRoot, outputRoot, marketFeed(d),
         d.getYear, d.getMonthValue, d.getDayOfMonth, language, retries, minRows)
-      val out = Dag.run(b.tasks, b.edges)
+      (b.tasks, b.edges)
+    }
+
+  /** Catch up a daily [[Dag]]: `buildDay` wires one missed date's
+    * (tasks, edges), [[Dag.run]] runs it, and the day succeeds when every
+    * task did. The watermark lives beside the warehouse at
+    * `<outputRoot>/_catchup_watermark`; each run date keeps its task
+    * outcomes (none when wiring the day threw).
+    */
+  private[pipelines] def runDags(
+      spark: SparkSession, outputRoot: String,
+      startDate: LocalDate, untilExclusive: LocalDate)(
+      buildDay: LocalDate => (Seq[Dag.Task], Seq[(String, String)])): Seq[DayRun] = {
+    var details = Map.empty[LocalDate, Seq[Dag.Outcome]]
+    val ran = run(spark, s"$outputRoot/_catchup_watermark", startDate, untilExclusive) { d =>
+      val (tasks, edges) = buildDay(d)
+      val out = Dag.run(tasks, edges)
       details += d -> out
       out.forall(_.status == Dag.Succeeded)
     }

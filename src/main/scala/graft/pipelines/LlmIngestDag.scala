@@ -320,17 +320,11 @@ object LlmIngestDag {
       embeddingsFor: Option[LocalDate => org.apache.spark.sql.DataFrame] = None,
       annUnionEmbeddings: Option[() => org.apache.spark.sql.DataFrame] = None,
       mediaFingerprint: Option[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame] = None)
-      : Seq[Catchup.DayRun] = {
-    val wm = s"$outputRoot/_catchup_watermark"
-    var details = Map.empty[LocalDate, Seq[Dag.Outcome]]
-    val ran = Catchup.run(spark, wm, startDate, untilExclusive) { d =>
+      : Seq[Catchup.DayRun] =
+    Catchup.runDags(spark, outputRoot, startDate, untilExclusive) { d =>
       val b = build(spark, inputRoot, outputRoot, d, connect, cfg,
         retries, minRows, compactMaxFiles, embeddingsFor, annUnionEmbeddings,
         mediaFingerprint)
-      val out = Dag.run(b.tasks, b.edges)
-      details += d -> out
-      out.forall(_.status == Dag.Succeeded)
+      (b.tasks, b.edges)
     }
-    ran.map { case (d, ok) => Catchup.DayRun(d, ok, details.getOrElse(d, Nil)) }
-  }
 }

@@ -243,4 +243,33 @@ class CorpusPipelineSpec extends SparkTestBase {
     assert(defaultNames == Seq("input", "lang", "quality", "repetition",
       "exact_dedup", "near_dedup", "sample"))
   }
+
+  test("column contracts: clean and cleanV2 keep every input column, cleanV3 a fixed set") {
+    val docs = Seq(
+      (1L, "alpha beta gamma delta the", "s1", "x1"),
+      (2L, "one two three four the", "s2", "x2"),
+      (3L, "five six seven eight the", "s2", "x3"))
+      .toDF("doc_id", "text", "source", "extra")
+    val cfg = CorpusPipeline.Config(
+      minTokens = 4, maxTopWordFrac = 0.5, jaccardThreshold = 0.6, samplePerSource = 2,
+      interleaveBp = Seq(("s1", 5000), ("s2", 5000)))
+    def extras(df: org.apache.spark.sql.DataFrame) =
+      df.select($"doc_id", $"extra").as[(Long, String)].collect().toSet
+    val all = Set(1L -> "x1", 2L -> "x2", 3L -> "x3")
+
+    // the no-checkpoint full-row path daily ingest writes, also with the
+    // perplexity stage (on in LlmIngestDag's default config)
+    val v1 = CorpusPipeline.clean(docs, cfg)
+    assert(v1.columns.toSeq == docs.columns.toSeq)
+    assert(extras(v1) == all)
+    assert(CorpusPipeline.clean(docs, cfg.copy(dropPplTail = true)).columns.toSeq ==
+      docs.columns.toSeq)
+
+    val v2 = CorpusPipeline.cleanV2(docs, cfg)
+    assert(v2.columns.toSeq == docs.columns.toSeq ++ Seq("split_key", "split"))
+    assert(extras(v2) == all)
+
+    assert(CorpusPipeline.cleanV3(docs, cfg).columns.toSeq ==
+      Seq("doc_id", "text", "source", "split_key", "split", "ordinal"))
+  }
 }

@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, Relational}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Null / degenerate-input behavior: a 100 TB corpus WILL contain nulls,
@@ -277,12 +278,20 @@ class RobustnessSpec extends SparkTestBase {
     assert(out(1L)._3 == 1L && !out(1L)._5 && out(1L)._6 == "")
     assert(out(5L)._3 == 1L && !out(5L)._5)
 
-    // v2 pipeline on a corpus with no survivors at all: empty stages, no crash
+    // every pipeline chain on a corpus with no survivors at all: empty
+    // stages, a zero last audit row (v3's is the empty train checksum),
+    // an empty cleaned corpus, no crash
+    import pipelines.CorpusPipeline._
     val gone = Seq((1L, "zz qq", "s1")).toDF("doc_id", "text", "source")
-    val audit = pipelines.CorpusPipeline.auditCountsV2(
-      gone, pipelines.CorpusPipeline.Config(minTokens = 4))
-      .as[(Int, String, Long)].collect().sortBy(_._1)
-    assert(audit.length == 11 && audit.last._3 == 0L)
+    val cfg = Config(minTokens = 4)
+    Seq[(String, Int, (DataFrame, Config) => DataFrame, (DataFrame, Config) => DataFrame)](
+      ("v1", 7, auditCounts, clean),
+      ("v2", 11, auditCountsV2, cleanV2),
+      ("v3", 13, auditCountsV3, cleanV3)).foreach { case (chain, rows, auditOf, cleanOf) =>
+      val audit = auditOf(gone, cfg).as[(Int, String, Long)].collect().sortBy(_._1)
+      assert(audit.length == rows && audit.last._3 == 0L, s"$chain: ${audit.toSeq}")
+      assert(cleanOf(gone, cfg).isEmpty, s"$chain: clean frame not empty")
+    }
   }
 
   test("classifier and interleave tolerate null/empty/one-class/empty-corpus inputs") {
